@@ -576,6 +576,9 @@ def run_big_ann(spark) -> dict:
     fracs = [0.0, 0.000005, 0.08818286, 0.22439929, 0.39682500,
              0.55555500, 0.64373857, 0.79365071, 0.89285714, 0.99999929]
     qids = sorted({min(n_idx - 1, round(f * n_idx)) for f in fracs})
+    # a small corpus can round several fractions onto one id: record the
+    # query count the per-query figures below actually divide by
+    out["n_queries"] = len(qids)
 
     # serving model: the caller holds the query vectors (topk_for_ids'
     # fetch is a convenience full-slice scan, documented as such) — fetch

@@ -22,7 +22,10 @@ index designs; SURVEY.md §7 M2):
     block_max_tf  int32
     block_max_score double  exact max of the BM25 term score over the block
                             (computed at build with true dl/avgdl/idf →
-                            a *safe and tight* WAND upper bound)
+                            a *safe and tight* block upper bound; stored
+                            for block-level skipping, which the current
+                            scorer does not do — it decodes every
+                            candidate block)
 
 Round-trip identity is property-tested in tests/test_codec.py, the analogue
 of the reference's codec round-trip test (/root/reference/index_test.go:44-76).
@@ -121,8 +124,10 @@ def make_blocks(
     idf is a positive per-term constant, so ``idf * block_max_raw`` is an
     exact, tight block-max score — and the build never has to join the
     dictionary (idf isn't known until global df is, and at 10^12-doc scale
-    the dictionary is not broadcastable).  Query time multiplies by the idf
-    of each query term (a handful of scalars).
+    the dictionary is not broadcastable).  A skipping scorer multiplies by
+    the idf of each query term (a handful of scalars); the bound holds
+    only for the avgdl the block was encoded with, so under avgdl drift it
+    must derive its bound from (block_max_tf, block_min_dl) instead.
 
     Inputs must be sorted by doc_id ascending.
     """
@@ -247,29 +252,6 @@ def encode_runs(
         "block_max_raw": np.maximum.reduceat(raw, block_starts),
         "cf_block": np.add.reduceat(t, block_starts),
     }
-
-
-def block_upper_bound(
-    max_tf: np.ndarray,
-    min_dl: np.ndarray,
-    avgdl: float,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> np.ndarray:
-    """Safe idf-free block score bound for the CURRENT avgdl.
-
-    The per-posting score is increasing in tf and decreasing in dl, so
-    raw(max_tf, min_dl, avgdl) ≥ raw(tf_i, dl_i, avgdl) for every posting
-    in the block — for ANY avgdl.  ``block_max_raw`` (the exact max at
-    encode time) is only a valid bound for the avgdl it was encoded with;
-    in an incremental index avgdl drifts as documents arrive, and pruning
-    against a stale bound is UNSAFE (found as a real rank error in the
-    streaming-ingest tests).  Query-time pruning therefore always derives
-    its bound from (block_max_tf, block_min_dl) with the live avgdl.
-    """
-    t = np.asarray(max_tf, dtype=np.float64)
-    dl = np.asarray(min_dl, dtype=np.float64)
-    return t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -3,25 +3,23 @@ persisted inverted index.
 
 The reference engine scores every query as a disjunctive vector match
 (/root/reference/index.go:52-86); a fulltext engine also needs filtered
-retrieval — "all of these, none of those, rank by relevance".  The
-Spark-first construction keeps the exact plan shape of
-:meth:`wand.IndexReader.batch_search`: one partition-pruned,
+retrieval — "all of these, none of those, rank by relevance".  Boolean
+queries run the same plan and the same kernel as ranked retrieval
+(:meth:`wand.IndexReader._bucket_topk`): one partition-pruned,
 term-pushed posting scan covering every clause's terms, ONE exchange
-sized to the true doc-bucket count, then a per-bucket Arrow kernel that
-does candidate algebra and scoring as numpy set/array ops:
+sized to the true doc-bucket count, then per bucket
+:func:`wand.bucket_topk`, which does the candidate algebra as masks over
+the bucket's doc range while it accumulates BM25:
 
-- **MUST** — per-bucket sorted-array intersection of the must terms'
-  posting lists (a doc lives in exactly one bucket, so bucket-local
-  intersection is globally correct).
-- **MUST_NOT** — sorted-array set-difference against the union of the
-  excluded terms' postings in the same bucket.  No corpus scan: an
-  exclusion only needs the excluded terms' postings.
-- **SHOULD** — when no MUST clause exists the candidates are the union
-  of the should terms' postings; otherwise should terms only add score.
+- **MUST** — a doc must hold every must term (must-hit count).
+- **MUST_NOT** — the excluded terms' postings in the same bucket clear
+  their docs.  No corpus scan: an exclusion only needs the excluded
+  terms' postings.
+- **SHOULD** — when no MUST clause exists the candidates are the docs
+  holding any should term; otherwise should terms only add score.
 - **Scoring** — BM25 summed over the distinct (must ∪ should) terms a
-  candidate contains, accumulated per term in ascending term order into
-  a float64 array indexed by candidate position (bit-identical summation
-  order to wand.dense_topk and the DuckDB oracle).
+  candidate contains, in ascending term order (bit-identical to the
+  DuckDB oracle).
 
 OOV semantics mirror the reference's guard style (index.go:54-56): an
 OOV must term → 0 rows (nothing can match); OOV should / must_not terms
@@ -35,33 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import codec
 from ..analyzer import tokenize
-from ..functions.bm25 import B, K1
-from .wand import tombstones_ref
-
-_EMPTY_SCHEMA = "doc_id bigint, score double"
-
-
-def _decode_term(group: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Concat-decode one term's blocks within a bucket group →
-    (doc_ids, tfs, dls), doc_ids sorted ascending.
-
-    Blocks ARE doc-ordered within a segment (indexer.finalize), but
-    applyInPandas group rows carry no order guarantee — the explicit
-    first_doc sort below is what makes the documented sorted-output
-    invariant true (wand.TermCursor sorts for the same reason)."""
-    group = group.sort_values("first_doc")
-    ids, tfs, dls = [], [], []
-    for ids_b, tfs_b, dls_b, n, first in zip(
-        group["doc_ids_delta"], group["tfs"], group["dls"],
-        group["n_docs"], group["first_doc"],
-    ):
-        n = int(n)
-        ids.append(codec.decode_doc_ids(ids_b, int(first), n))
-        tfs.append(codec.decode_tfs(tfs_b, n))
-        dls.append(codec.decode_dls(dls_b, n))
-    return np.concatenate(ids), np.concatenate(tfs), np.concatenate(dls)
+from .wand import bucket_match
 
 
 def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame | None:
@@ -69,122 +42,23 @@ def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame |
     (intersection of posting lists), ``any`` = disjunction (union).
 
     Returns (doc_bucket, doc_id); None when no doc can match (``all``
-    with an OOV term, or ``any`` with every term OOV).  Same plan as
-    phrase.conjunctive_doc_ids: pruned scan → one exchange → numpy
-    per-bucket set algebra.
+    with an OOV term, or ``any`` with every term OOV).  Plan: the
+    per-bucket plan (pruned scan → one exchange) with numpy set algebra
+    per bucket (:func:`wand.bucket_match`).
     """
     uniq = sorted(set(terms))
     dict_rows = reader._dictionary_rows(uniq)
-    if mode == "all" and len(dict_rows) < len(uniq):
+    if not dict_rows or (mode == "all" and len(dict_rows) < len(uniq)):
         return None
     live = sorted(dict_rows)
-    if not live:
-        return None
-    blocks = reader.candidate_blocks(live, [b for _, b in dict_rows.values()])
-    n_terms = len(live)
-    conj = mode == "all"
-    deleted_small, deleted_bc = tombstones_ref(reader)
 
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-        per_term = [
-            _decode_term(g)[0] for _, g in pdf.groupby("term")
-        ]
-        if conj:
-            if len(per_term) < n_terms:
-                acc = np.empty(0, dtype=np.int64)
-            else:
-                per_term.sort(key=len)
-                acc = per_term[0]
-                for ids in per_term[1:]:
-                    acc = np.intersect1d(acc, ids, assume_unique=True)
-                    if acc.shape[0] == 0:
-                        break
-        else:
-            acc = np.unique(np.concatenate(per_term))
-        if deleted and acc.shape[0]:
-            acc = acc[~np.isin(acc, np.fromiter(deleted, dtype=np.int64))]
+    def combine(by_term, bucket: int, deleted) -> pd.DataFrame:
+        acc = bucket_match(by_term, live, mode, deleted)
         return pd.DataFrame(
-            {
-                "doc_bucket": np.full(acc.shape[0], int(pdf["doc_bucket"].iloc[0]), dtype=np.int32),
-                "doc_id": acc,
-            }
+            {"doc_bucket": np.full(acc.shape[0], bucket, dtype=np.int32), "doc_id": acc}
         )
 
-    n_buckets = -(-int(reader.stats["n_docs"]) // int(reader.stats["doc_bucket_size"]))
-    n_part = max(1, min(reader.spark.sparkContext.defaultParallelism, n_buckets))
-    return (
-        blocks.repartition(n_part, "doc_bucket")
-        .groupBy("doc_bucket")
-        .applyInPandas(combine, schema="doc_bucket int, doc_id long")
-    )
-
-
-def _clause_topk(
-    by_term: dict,
-    must_live: list[str],
-    should_live: list[str],
-    mnot_live: list[str],
-    idf_b: dict[str, float],
-    avgdl: float,
-    k: int,
-    deleted: frozenset | None,
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """Per-bucket candidate algebra + BM25 for ONE clause set over the
-    bucket's decoded terms (``by_term``: term → (doc_ids, tfs, dls), each
-    sorted unique by doc_id).  Returns (doc_ids, scores) of the local
-    top-k, or None when the clause matches nothing in this bucket."""
-    if must_live:
-        musts = [by_term[t][0] for t in must_live if t in by_term]
-        if len(musts) < len(must_live):
-            return None
-        musts.sort(key=len)
-        cand = musts[0]
-        for ids in musts[1:]:
-            cand = np.intersect1d(cand, ids, assume_unique=True)
-            if cand.shape[0] == 0:
-                break
-    else:
-        unions = [by_term[t][0] for t in should_live if t in by_term]
-        if not unions:
-            return None
-        cand = np.unique(np.concatenate(unions))
-    if cand.shape[0] and mnot_live:
-        excl = [by_term[t][0] for t in mnot_live if t in by_term]
-        if excl:
-            cand = cand[~np.isin(cand, np.concatenate(excl), assume_unique=False)]
-    if deleted and cand.shape[0]:
-        cand = cand[~np.isin(cand, np.fromiter(deleted, dtype=np.int64))]
-    if cand.shape[0] == 0:
-        return None
-    # BM25 over scoring terms, ascending term order, accumulated by
-    # candidate position (cand and each posting list are sorted unique)
-    scoring = sorted(set(must_live) | set(should_live))
-    scores = np.zeros(cand.shape[0], dtype=np.float64)
-    for term in scoring:
-        got = by_term.get(term)
-        if got is None:
-            continue
-        docs, tf_i, dl_i = got
-        pos = np.searchsorted(cand, docs)
-        pos_c = np.minimum(pos, cand.shape[0] - 1)
-        mask = cand[pos_c] == docs
-        if not mask.any():
-            continue
-        tf = tf_i[mask].astype(np.float64)
-        dl = dl_i[mask].astype(np.float64)
-        idf = idf_b[term]
-        contrib = idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-        scores[pos_c[mask]] += contrib
-    keep = np.flatnonzero(scores > 0.0)
-    if keep.shape[0] == 0:
-        return None
-    if keep.shape[0] > k:
-        kth = -np.partition(-scores[keep], k - 1)[k - 1]
-        keep = keep[scores[keep] >= kth]
-    order = np.lexsort((cand[keep], -scores[keep]))[:k]
-    chosen = keep[order]
-    return cand[chosen], scores[chosen]
+    return reader._bucket_groups(dict_rows, combine, "doc_bucket int, doc_id long")
 
 
 def boolean_batch(
@@ -199,14 +73,13 @@ def boolean_batch(
     term-pushed posting scan over the union of every clause's terms and
     ONE exchange sized to the true bucket count; per bucket each term
     decodes ONCE for the whole batch (head terms typically appear in many
-    clauses), then the clause algebra loops queries — the exact shape of
-    wand.batch_search.  Per-query semantics are unchanged from
-    boolean_search: an OOV must term, or no live (must ∪ should) term,
-    yields 0 rows for that query only.  The final merge is the
-    hierarchical exact top-k (wand.ranked_topk).
+    clauses), then the kernel loops queries — the plan of
+    wand.IndexReader.batch_search, which is the should-only case.
+    Per-query semantics are unchanged from boolean_search: an OOV must
+    term, or no live (must ∪ should) term, yields 0 rows for that query
+    only.  The final merge is the hierarchical exact top-k
+    (wand.ranked_topk).
     """
-    from .wand import ranked_topk
-
     spark = reader.spark
     empty = "query_id string, rank int, doc_id bigint, score double"
     if k <= 0 or not clauses:
@@ -236,42 +109,8 @@ def boolean_batch(
         needed.update(must_t, should_live, mnot_live)
     if not specs:
         return spark.createDataFrame([], empty)
-
-    live = sorted(needed)
-    blocks = reader.candidate_blocks(
-        live, [dict_rows[t][1] for t in live]
-    )
-    avgdl = float(reader.stats["avgdl"])
-    idf_b = {t: idf for t, (idf, _) in dict_rows.items() if t in needed}
-    specs_b = dict(specs)
-    deleted_small, deleted_bc = tombstones_ref(reader)
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-        by_term = {t: _decode_term(g) for t, g in pdf.groupby("term")}
-        outs = []
-        for qid, (must_l, should_l, mnot_l) in specs_b.items():
-            got = _clause_topk(
-                by_term, must_l, should_l, mnot_l, idf_b, avgdl, k, deleted
-            )
-            if got is None:
-                continue
-            ids, scores = got
-            out = pd.DataFrame({"doc_id": ids, "score": scores})
-            out.insert(0, "query_id", qid)
-            outs.append(out)
-        if not outs:
-            return pd.DataFrame(columns=["query_id", "doc_id", "score"])
-        return pd.concat(outs, ignore_index=True)
-
-    n_buckets = -(-int(reader.stats["n_docs"]) // int(reader.stats["doc_bucket_size"]))
-    n_score = max(1, min(spark.sparkContext.defaultParallelism, max(1, n_buckets)))
-    local = (
-        blocks.repartition(n_score, "doc_bucket")
-        .groupBy("doc_bucket")
-        .applyInPandas(score_bucket, schema="query_id string, " + _EMPTY_SCHEMA)
-    )
-    return ranked_topk(local, k, n_buckets)
+    idf = {t: dict_rows[t][0] for t in sorted(needed)}
+    return reader._bucket_topk(specs, dict_rows, idf, k)
 
 
 def boolean_search(

@@ -47,7 +47,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import codec
 from ..analyzer import tokenize
 from ..functions.bm25 import term_score_col
 from ..functions.positional import (
@@ -58,7 +57,8 @@ from ..functions.positional import (
     phrase_tf_np,
 )
 from ..oracle import idf as oracle_idf
-from .wand import tombstones_ref
+from .boolean import matching_doc_ids
+from .wand import bucket_match, ranked_topk
 
 #: broadcast the candidate side of the verify join only below this many
 #: candidate docs (driver-side count; above it fall back to a shuffled
@@ -108,64 +108,6 @@ def phrase_tf_col(toks, terms: list[str]):
         )
 
     return F.size(F.filter(guarded, is_match)).cast("int")
-
-
-def conjunctive_doc_ids(reader, terms: list[str]) -> DataFrame | None:
-    """Docs containing ALL ``terms``: per-bucket posting-list intersection.
-
-    Returns (doc_bucket, doc_id) or None when any term is OOV (no doc can
-    match).  One pruned scan + one exchange sized to the true bucket
-    count; per bucket the decode is the same numpy varint path the WAND
-    scorer uses, and the intersection is sorted-array ``np.intersect1d``.
-    """
-    uniq = sorted(set(terms))
-    dict_rows = reader._dictionary_rows(uniq)
-    if len(dict_rows) < len(uniq):
-        return None
-    blocks = reader.candidate_blocks(uniq, [b for _, b in dict_rows.values()])
-    n_terms = len(uniq)
-    deleted_small, deleted_bc = tombstones_ref(reader)
-
-    def intersect(pdf: pd.DataFrame) -> pd.DataFrame:
-        deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-        per_term = []
-        for _, g in pdf.groupby("term"):
-            ids = np.concatenate(
-                [
-                    codec.decode_doc_ids(ids_b, int(first), int(n))
-                    for ids_b, first, n in zip(
-                        g["doc_ids_delta"], g["first_doc"], g["n_docs"]
-                    )
-                ]
-            )
-            per_term.append(ids)
-        if len(per_term) < n_terms:
-            return pd.DataFrame({"doc_bucket": [], "doc_id": []}).astype(
-                {"doc_bucket": "int32", "doc_id": "int64"}
-            )
-        # rarest-first: intersections only shrink, so start smallest
-        per_term.sort(key=len)
-        acc = per_term[0]
-        for ids in per_term[1:]:
-            acc = np.intersect1d(acc, ids, assume_unique=True)
-            if acc.shape[0] == 0:
-                break
-        if deleted and acc.shape[0]:
-            acc = acc[~np.isin(acc, np.fromiter(deleted, dtype=np.int64))]
-        return pd.DataFrame(
-            {
-                "doc_bucket": np.full(acc.shape[0], int(pdf["doc_bucket"].iloc[0]), dtype=np.int32),
-                "doc_id": acc,
-            }
-        )
-
-    n_buckets = -(-int(reader.stats["n_docs"]) // int(reader.stats["doc_bucket_size"]))
-    n_part = max(1, min(reader.spark.sparkContext.defaultParallelism, n_buckets))
-    return (
-        blocks.repartition(n_part, "doc_bucket")
-        .groupBy("doc_bucket")
-        .applyInPandas(intersect, schema="doc_bucket int, doc_id long")
-    )
 
 
 def near_tf_col(toks, terms: list[str], slop: int):
@@ -290,7 +232,7 @@ def _pseudo_term_search(reader, terms: list[str], kernel, k: int) -> DataFrame:
         # postings, not staged doc files) — exclude both.
         joined = _minus_gone(reader, reader.doc_source().select("doc_id", "text"))
     else:
-        cands = conjunctive_doc_ids(reader, terms)
+        cands = matching_doc_ids(reader, terms, "all")
         if cands is None:
             return spark.createDataFrame([], _EMPTY_SCHEMA)
         cands = cands.cache()
@@ -475,8 +417,6 @@ def _pseudo_term_batch(
     in the kernel closures (driver-sized: ≤ batch terms), not a join, and
     each Arrow batch tokenizes ONCE no matter how many queries consume
     it."""
-    from .wand import ranked_topk
-
     spark = reader.spark
     empty = "query_id string, rank int, doc_id bigint, score double, ptf int"
     if k <= 0 or not parsed:
@@ -491,7 +431,6 @@ def _pseudo_term_batch(
     if not specs:
         return spark.createDataFrame([], empty)
     n_docs = int(reader.stats["n_docs"])
-    deleted_small, deleted_bc = tombstones_ref(reader)
     # per-query dense split (same rule as _pseudo_term_search): queries
     # whose every term is in ≥ half the corpus skip candidate generation;
     # ONE flat corpus verify serves ALL dense queries of the batch
@@ -506,31 +445,13 @@ def _pseudo_term_batch(
     parts = []
     cands = None
     if sparse:
-        needed = sorted({t for terms in sparse.values() for t in terms})
-        blocks = reader.candidate_blocks(
-            needed, [dict_rows[t][1] for t in needed]
-        )
+        needed = {t for terms in sparse.values() for t in terms}
         uniq_by_q = {qid: sorted(set(terms)) for qid, terms in sparse.items()}
 
-        def intersect_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            from .boolean import _decode_term
-
-            deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-            by_term = {t: _decode_term(g)[0] for t, g in pdf.groupby("term")}
-            bucket = int(pdf["doc_bucket"].iloc[0])
+        def intersect_batch(by_term, bucket: int, deleted) -> pd.DataFrame:
             outs = []
             for qid, uniq in uniq_by_q.items():
-                per_term = [by_term[t] for t in uniq if t in by_term]
-                if len(per_term) < len(uniq):
-                    continue
-                per_term.sort(key=len)
-                acc = per_term[0]
-                for ids in per_term[1:]:
-                    acc = np.intersect1d(acc, ids, assume_unique=True)
-                    if acc.shape[0] == 0:
-                        break
-                if deleted and acc.shape[0]:
-                    acc = acc[~np.isin(acc, np.fromiter(deleted, dtype=np.int64))]
+                acc = bucket_match(by_term, uniq, "all", deleted)
                 if acc.shape[0]:
                     outs.append(
                         pd.DataFrame(
@@ -541,16 +462,11 @@ def _pseudo_term_batch(
                 return pd.DataFrame(columns=["query_id", "doc_bucket", "doc_id"])
             return pd.concat(outs, ignore_index=True)
 
-        n_bkts = -(-n_docs // int(reader.stats["doc_bucket_size"]))
-        n_part = max(1, min(spark.sparkContext.defaultParallelism, n_bkts))
-        cands = (
-            blocks.repartition(n_part, "doc_bucket")
-            .groupBy("doc_bucket")
-            .applyInPandas(
-                intersect_batch, schema="query_id string, doc_bucket int, doc_id long"
-            )
-            .persist()
-        )
+        cands = reader._bucket_groups(
+            {t: dict_rows[t] for t in needed},
+            intersect_batch,
+            "query_id string, doc_bucket int, doc_id long",
+        ).persist()
         per_bucket = (
             cands.groupBy("doc_bucket").count().limit(MAX_BUCKET_LIST + 1).collect()
         )
@@ -635,7 +551,6 @@ def _pseudo_term_batch(
     for p in parts[1:]:
         verified = verified.unionByName(p)
     verified = verified.persist()
-    n_buckets = -(-n_docs // int(reader.stats["doc_bucket_size"]))
     try:
         try:
             dfs = {
@@ -684,7 +599,7 @@ def _pseudo_term_batch(
                 .filter(F.col("_br") <= k)
                 .drop("_br")
             )
-            out = ranked_topk(scored, k, n_buckets, extra=("ptf",))
+            out = ranked_topk(scored, k, reader._n_buckets(), extra=("ptf",))
             rows = out.collect()  # ≤ k × |queries| — materialize pre-unpersist
             return (
                 spark.createDataFrame(rows, schema=out.schema)
@@ -728,7 +643,7 @@ def phrase_count(reader, phrase_text: str) -> DataFrame:
         return spark.createDataFrame(
             [(int(row["n_docs"]), int(row["n_occurrences"]))], empty
         )
-    cands = conjunctive_doc_ids(reader, terms)
+    cands = matching_doc_ids(reader, terms, "all")
     if cands is None:
         return spark.createDataFrame([(0, 0)], empty)
     cands = cands.cache()

@@ -12,7 +12,8 @@ dictionary expansion → disjunctive BM25 over the expanded terms:
    "most frequent expansions" rule, deterministic and oracle-mirrorable.
 2. **Scoring** — the expanded terms feed the standard batch scorer
    (wand.IndexReader.batch_search): pruned postings scan, one exchange,
-   per-bucket WAND/dense dispatch.  Each expanded term keeps its own idf
+   the per-bucket scoring kernel (wand.bucket_topk).  Each expanded term
+   keeps its own idf
    — a prefix query is exactly a disjunctive multi-term query.
 
 The reference has no prefix operator (its dictionary is an in-memory map,

@@ -110,8 +110,8 @@ def rerank_topk(cand: DataFrame, k: int) -> DataFrame:
 
 def exclude_ids(df: DataFrame, col: str, deleted) -> DataFrame:
     """Drop rows whose ``col`` is tombstoned — the ANN/similarity
-    analogue of the lexical scorers' delete mask (wand.py wand_topk /
-    dense_topk).  Broadcast anti-join from a numpy array, never an
+    analogue of the lexical scorers' tombstone mask (wand.bucket_topk).
+    Broadcast anti-join from a numpy array, never an
     ``isin`` literal (delete sets are thousands-to-millions of ids);
     no-op when the set is empty."""
     if not deleted:

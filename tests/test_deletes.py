@@ -116,24 +116,6 @@ def test_deletes_hold_across_operator_families(spark, store, ddb):
     assert got == want
 
 
-def test_scorer_pair_parity_under_deletes(spark, store):
-    """WAND and dense dispatch must agree with tombstones active: force
-    each path via the dispatch threshold."""
-    import search_spark.operators.wand as w
-
-    store.delete_docs(_deleted(spark))
-    reader = IndexReader(spark, store)
-    orig = w.WAND_MAX_POSTINGS
-    try:
-        w.WAND_MAX_POSTINGS = 10**9  # force WAND
-        a = _ids(reader.batch_search([("q", Q)], 10).drop("query_id"))
-        w.WAND_MAX_POSTINGS = 0  # force dense
-        b = _ids(reader.batch_search([("q", Q)], 10).drop("query_id"))
-    finally:
-        w.WAND_MAX_POSTINGS = orig
-    assert a == b and len(a) == 10
-
-
 def test_facets_exclude_deleted(spark, store):
     dele = _deleted(spark)
     reader = IndexReader(spark, store)

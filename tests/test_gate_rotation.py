@@ -4,9 +4,11 @@ The driver's correctness gate runs the FIRST 50 entries of
 ``__spark_entry__.queries()``; the dict order therefore encodes evidence
 policy.  Round 4's verdict found the policy enforced from memory (touched
 entries rotated out).  This test derives the facts the policy depends on
-— last round's gate rows from the newest ``CORRECTNESS_r*.json`` and this
-round's touched modules from ``git diff`` against the pinned last-gated
-commit (``fixtures/last_gated_commit.txt``) — and asserts the rules hold:
+— the gate rows of the pinned last-gated round
+(``CORRECTNESS_r<NN>.json`` for the round in
+``fixtures/last_gated_round.txt``) and this round's touched modules from
+``git diff`` against that round's commit
+(``fixtures/last_gated_commit.txt``) — and asserts the rules hold:
 
 1. every entry WITHOUT a row in last round's gate is inside the first 50;
 2. every NEW entry (in neither gate json nor history) is inside the
@@ -18,7 +20,6 @@ commit (``fixtures/last_gated_commit.txt``) — and asserts the rules hold:
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -125,8 +126,12 @@ MODULE_ENTRIES: dict[str, list[str]] = {
 
 
 def _latest_gate() -> dict:
-    rounds = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
-    with open(rounds[-1]) as f:
+    """Gate rows of the round pinned beside the last-gated commit — not
+    the newest ``CORRECTNESS_r*.json``, which may belong to a later round
+    whose commit the diff below is not taken against."""
+    with open(os.path.join(REPO, "fixtures/last_gated_round.txt")) as f:
+        rnd = int(f.read().strip())
+    with open(os.path.join(REPO, f"CORRECTNESS_r{rnd:02d}.json")) as f:
         return json.load(f)
 
 

@@ -13,8 +13,8 @@ sys.path.insert(0, "/root/repo")
 
 from search_spark.corpus import transcripts_from_documents
 from search_spark.operators.indexer import build_index
+from search_spark.operators.boolean import matching_doc_ids
 from search_spark.operators.phrase import (
-    conjunctive_doc_ids,
     near_search,
     near_tf_col,
     phrase_count,
@@ -138,7 +138,7 @@ def test_near_tf_window_semantics(spark):
 
 
 def test_conjunctive_candidates_superset_and_pruned_plan(reader, spark):
-    cands = conjunctive_doc_ids(reader, ["order", "fast"])
+    cands = matching_doc_ids(reader, ["order", "fast"], "all")
     ids = {r["doc_id"] for r in cands.collect()}
     hits = {r["doc_id"] for r in phrase_search(reader, "order fast", 1000).collect()}
     assert hits <= ids and len(ids) > 0

@@ -1,6 +1,6 @@
 """Hypothesis property fuzzing over the frozen specs.
 
-The cross-engine contracts (analyzer, hash spec, codec, scorer pair) are
+The cross-engine contracts (analyzer, hash spec, codec, scoring kernel) are
 exactly the places where a drifted edge case silently breaks rank
 identity; fuzz them far beyond the fixture corpus.  Spark is intentionally
 NOT in the loop here (hypothesis generates hundreds of cases — driver
@@ -19,7 +19,7 @@ from hypothesis import strategies as st
 from search_spark import codec
 from search_spark.analyzer import tokenize, tokenize_pandas
 from search_spark.functions.hashing import P31, h32_py, minhash_perm_py, rolling_fp_py
-from search_spark.operators.wand import dense_topk, wand_topk
+from test_dense_scorer import kernel_topk, oracle_topk
 
 text_st = st.text(max_size=300)
 
@@ -97,34 +97,39 @@ def test_codec_roundtrip_arbitrary_gaps(pairs):
     st.integers(1, 4),
     st.integers(1, 30),
     st.floats(5.0, 80.0),
+    st.lists(st.sampled_from(["must", "should", "must_not"]), min_size=4, max_size=4),
+    st.sets(st.integers(0, 5000), max_size=40),
 )
 @settings(max_examples=150, deadline=None)
-def test_scorer_pair_fuzz(postings, n_terms, k, avgdl):
-    """wand_topk == dense_topk on arbitrary posting data split across
-    arbitrary term assignments — scores float-equal, order identical."""
+def test_scorer_pair_fuzz(postings, n_terms, k, avgdl, roles, deleted):
+    """bucket_topk == the brute-force oracle scorer on arbitrary posting
+    data split across arbitrary term assignments, first as plain ranked
+    retrieval, then under an arbitrary must/should/must_not role per term
+    with arbitrary tombstones — scores float-equal, order identical."""
     rng = np.random.default_rng(len(postings) * 31 + n_terms)
     postings = sorted(postings)
     assign = rng.integers(0, n_terms, size=len(postings))
-    by_term, qidf = {}, {}
+    blocks, raw, qidf = {}, {}, {}
     for t in range(n_terms):
         rows = [p for p, a in zip(postings, assign) if a == t]
         if not rows:
             continue
         term = f"t{t}"
-        docs = np.array([r[0] for r in rows], dtype=np.int64)
-        blk = codec.make_blocks(
-            docs,
-            np.array([r[1] for r in rows], dtype=np.int64),
-            np.array([r[2] for r in rows], dtype=np.int64),
-            avgdl,
-        )
-        by_term[term] = pd.DataFrame(blk)
+        arrays = tuple(np.array([r[i] for r in rows], dtype=np.int64) for i in range(3))
+        blocks[term] = pd.DataFrame(codec.make_blocks(*arrays, avgdl))
+        raw[term] = arrays
         qidf[term] = float(0.05 + (t + 1) * 0.7)
-    if not by_term:
+    if not blocks:
         return
-    w, _ = wand_topk(by_term, qidf, avgdl, k)
-    d = dense_topk(by_term, qidf, avgdl, k)
-    assert w == d
+    terms = sorted(blocks)
+    assert kernel_topk(blocks, [], terms, [], qidf, avgdl, k) == oracle_topk(
+        raw, [], terms, [], qidf, avgdl, k
+    )
+    clause = {r: [t for t, tr in zip(terms, roles) if tr == r] for r in set(roles)}
+    args = (clause.get("must", []), clause.get("should", []), clause.get("must_not", []))
+    assert kernel_topk(blocks, *args, qidf, avgdl, k, deleted) == oracle_topk(
+        raw, *args, qidf, avgdl, k, deleted
+    )
 
 
 @given(st.lists(text_st, min_size=1, max_size=30))
@@ -172,17 +177,13 @@ def test_tf_batches_matches_naive_counts(texts):
 )
 @settings(max_examples=250, deadline=None)
 def test_wand_vs_dense_on_multiblock_layouts(term_specs, k):
-    """Scorer-pair parity over MULTI-BLOCK per-term layouts (the
-    pre-compaction segment shape where the round-2 skip-cap hang lived):
-    postings runs are split at random points into separate make_blocks
-    calls, exactly like independent segments would produce.  wand_topk has
-    an internal progress guard, so a reintroduced hang fails loudly here
-    instead of wedging the suite."""
-    from search_spark import codec
-    from search_spark.operators.wand import dense_topk, wand_topk
-
+    """Kernel-vs-oracle over MULTI-BLOCK per-term layouts (the
+    pre-compaction segment shape): postings runs are split at random
+    points into separate make_blocks calls, exactly like independent
+    segments would produce, and the pieces arrive out of doc order, as
+    applyInPandas group rows may — decode_term must restore the order."""
     avgdl = 7.0
-    by_term = {}
+    blocks, raw = {}, {}
     for ti, (postings, n_splits) in enumerate(term_specs):
         doc = 0
         rows = []
@@ -198,15 +199,16 @@ def test_wand_vs_dense_on_multiblock_layouts(term_specs, k):
                 start = c
         frames = []
         for piece in pieces:
-            d = np.array([r[0] for r in piece], dtype=np.int64)
-            t = np.array([r[1] for r in piece], dtype=np.int64)
-            dl = np.array([r[2] for r in piece], dtype=np.int64)
-            frames.append(pd.DataFrame(codec.make_blocks(d, t, dl, avgdl)))
-        by_term[f"t{ti}"] = pd.concat(frames, ignore_index=True)
-    qidf = {t: 0.5 + 0.25 * i for i, t in enumerate(sorted(by_term))}
-    w, _ = wand_topk(by_term, qidf, avgdl, k)
-    d = dense_topk(by_term, qidf, avgdl, k)
-    assert w == d
+            arrays = tuple(np.array([r[i] for r in piece], dtype=np.int64) for i in range(3))
+            frames.append(pd.DataFrame(codec.make_blocks(*arrays, avgdl)))
+        term = f"t{ti}"
+        blocks[term] = pd.concat(frames[::-1], ignore_index=True)
+        raw[term] = tuple(np.array([r[i] for r in rows], dtype=np.int64) for i in range(3))
+    terms = sorted(blocks)
+    qidf = {t: 0.5 + 0.25 * i for i, t in enumerate(terms)}
+    assert kernel_topk(blocks, [], terms, [], qidf, avgdl, k) == oracle_topk(
+        raw, [], terms, [], qidf, avgdl, k
+    )
 
 
 @given(st.lists(text_st, min_size=1, max_size=30))
