@@ -1,17 +1,14 @@
 """Vectorized positional-match kernels (phrase / proximity tf).
 
-The JVM higher-order-function twins (`operators.phrase.phrase_tf_col`,
-`near_tf_col`) are semantically exact but *interpreted*: Catalyst does not
-codegen lambda bodies, and every lambda invocation re-evaluates outer
-expressions — measured ~10× the cost of tokenization itself on a 1.4M-doc
-head-only phrase verify (37 s vs 3.5 s for the tokenize-only scan).  These
-kernels are the Arrow/numpy hot path used inside ``mapInPandas`` verify
-stages: tokenize ONCE per doc via :func:`analyzer.tokenize_arrow` (flat
-token array + parent indices, all Arrow C++), then count matches with
-shifted-slice boolean algebra over the whole batch — no per-row Python.
+The positional verify of operators/phrase.py runs these inside its one
+``mapInPandas`` verify generator: :func:`flat_tokens` tokenizes a batch
+ONCE via :func:`analyzer.tokenize_arrow` (flat token array + parent
+indices, all Arrow C++), then the counting kernels match with
+shifted-slice boolean algebra over the whole batch — no per-row Python,
+and one tokenize serves every query that checks the batch.
 
-Semantics are pinned to the JVM twins (property-tested equal in
-tests/test_phrase.py):
+Semantics are pinned to the DuckDB oracle (``phrase_topk_sql`` /
+``near_topk_sql``, property-tested equal in tests/test_phrase.py):
 
 - phrase tf = number of start offsets where the ORDERED terms appear
   consecutively; overlapping occurrences all count.
@@ -20,8 +17,8 @@ tests/test_phrase.py):
   ALL distinct terms; docs shorter than the distinct-term count match 0.
 
 Reference analogue: the positional verify behind phrase search — the
-reference scores flat token multisets only (/root/reference/index.go:53-86),
-so phrase/near semantics are defined by our SQL oracle, not the Go code.
+reference scores flat token multisets only (index.go:53-86), so
+phrase/near semantics are defined by our SQL oracle, not the Go code.
 """
 
 from __future__ import annotations
@@ -31,13 +28,7 @@ import pandas as pd
 
 from ..analyzer import tokenize_arrow
 
-__all__ = [
-    "flat_tokens",
-    "phrase_tf_np",
-    "near_tf_np",
-    "phrase_tf_from_flat",
-    "near_tf_from_flat",
-]
+__all__ = ["flat_tokens", "phrase_tf_from_flat", "near_tf_from_flat"]
 
 
 def flat_tokens(texts: pd.Series | list):
@@ -63,17 +54,11 @@ def _term_masks(flat, terms: list[str]) -> dict[str, np.ndarray]:
     }
 
 
-def phrase_tf_np(texts, terms: list[str]) -> tuple[np.ndarray, np.ndarray]:
-    """(ptf, dl) int32 arrays for a batch: exact ordered-phrase occurrence
-    counts (overlapping counted) of ``terms`` per text."""
-    flat, di, dl = flat_tokens(texts)
-    return phrase_tf_from_flat(flat, di, dl, terms), dl
-
-
 def phrase_tf_from_flat(flat, di, dl, terms: list[str]) -> np.ndarray:
-    """Counting core of :func:`phrase_tf_np` over a PRE-TOKENIZED batch
-    (the ``flat_tokens`` triple) — lets a multi-query verify stage pay the
-    tokenize cost once per Arrow batch, not once per query."""
+    """int32 exact ordered-phrase occurrence counts (overlapping counted)
+    of ``terms`` per doc of a PRE-TOKENIZED batch (the ``flat_tokens``
+    triple) — a multi-query verify stage pays the tokenize cost once per
+    Arrow batch, not once per query."""
     n = len(dl)
     w = len(terms)
     L = len(flat)
@@ -90,21 +75,13 @@ def phrase_tf_from_flat(flat, di, dl, terms: list[str]) -> np.ndarray:
     return np.bincount(di[0:M][m], minlength=n).astype(np.int32)
 
 
-def near_tf_np(
-    texts, terms: list[str], slop: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """(ptf, dl) int32 arrays for a batch: per text, the number of start
-    offsets whose window of ``|distinct terms| + slop`` tokens (clamped to
-    the doc) contains all distinct terms — `near_tf_col` semantics."""
-    flat, di, dl = flat_tokens(texts)
-    return near_tf_from_flat(flat, di, dl, terms, slop), dl
-
-
 def near_tf_from_flat(
     flat, di, dl, terms: list[str], slop: int
 ) -> np.ndarray:
-    """Counting core of :func:`near_tf_np` over a pre-tokenized batch
-    (same tokenize-once contract as :func:`phrase_tf_from_flat`)."""
+    """int32 per-doc count of start offsets whose window of ``|distinct
+    terms| + slop`` tokens (clamped to the doc) contains all distinct
+    terms, over a pre-tokenized batch (same tokenize-once contract as
+    :func:`phrase_tf_from_flat`)."""
     n = len(dl)
     uniq = sorted(set(terms))
     n_uniq = len(uniq)

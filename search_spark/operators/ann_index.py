@@ -234,18 +234,18 @@ class LshIndex:
     """Query-side handle on a persisted LSH layout (snapshot at open, like
     operators/wand.IndexReader).
 
-    Opening an index raises ``spark.sql.parquet.pushdown.inFilterThreshold``
-    to 4096 FOR THE WHOLE SESSION (deliberate: the query methods return lazy
-    DataFrames, so the conf must hold at action time — a set/restore inside
-    topk() would undo itself before execution).  The setting only widens
-    when parquet In-filters reach row-group stats; for non-ANN scans that
-    means a >10-element isin() can now prune row groups too — strictly more
-    pruning, at a per-row-group predicate-evaluation cost that is noise next
-    to decode.  Callers embedding this in a latency-critical mixed session
-    can snapshot/restore the conf around the ANN lifetime themselves."""
+    The index reads through its own ``spark.newSession()``: the same
+    SparkContext (executors, cache, job groups) with its own SQL conf, in
+    which ``spark.sql.parquet.pushdown.inFilterThreshold`` is 4096.  The
+    bucket In-filter must reach parquet row-group stats, and Spark skips
+    parquet pushdown for In-sets beyond a small threshold (default 10)
+    while a multi-probe batch carries hundreds of buckets.  The query
+    methods return lazy DataFrames of that session, so the conf holds at
+    action time, and the caller's session conf is left as it was."""
 
     def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
+        self.spark = spark.newSession()
+        self.spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
         self.root = root
         with open(os.path.join(root, "_lsh_meta.json")) as f:
             self.meta = json.load(f)
@@ -257,16 +257,8 @@ class LshIndex:
             raise ValueError("lsh index built under a different hash spec")
         self._P = plane_matrix(self.meta["dim"], self.meta["tables"], self.meta["planes"])
         base = os.path.join(root, "buckets")
-        self._df = spark.read.option("basePath", base).parquet(base)
+        self._df = self.spark.read.option("basePath", base).parquet(base)
         self._counts: tuple[np.ndarray, np.ndarray] | None | bool = False  # lazy
-        # documented session default of opening an ANN index: the bucket
-        # In-filter must reach parquet row-group stats, and Spark skips
-        # parquet pushdown for In-sets beyond a small threshold (default
-        # 10) while a multi-probe batch carries hundreds of buckets.  Set
-        # ONCE here — the query methods return lazy DataFrames, so the
-        # conf has to hold at action time, not call time; a set/restore
-        # inside topk() would silently undo itself before execution.
-        spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
 
     def _bucket_counts(self) -> tuple[np.ndarray, np.ndarray] | None:
         """Sorted (key, count) arrays of the bucket-occupancy sidecar, or

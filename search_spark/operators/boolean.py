@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..analyzer import tokenize
+from .phrase import candidate_docs
 from .wand import bucket_match
 
 
@@ -146,8 +147,9 @@ def facet_counts(
 
     Plan: index-driven match set (matching_doc_ids — never a corpus text
     scan) → broadcast-joined against the doc source pruned to the
-    candidate units → hash-aggregate on the facet column.  One pruned
-    postings scan + one pruned docs scan + one tiny aggregate.
+    candidate units (phrase.candidate_docs, the phrase verify's join) →
+    hash-aggregate on the facet column.  One pruned postings scan + one
+    pruned docs scan + one tiny aggregate.
     """
     spark = reader.spark
     terms = tokenize(query_text)
@@ -159,26 +161,11 @@ def facet_counts(
         return spark.createDataFrame([], empty)
     ids = ids.cache()
     try:
-        from .phrase import BROADCAST_CANDIDATES_MAX, MAX_BUCKET_LIST
-
-        per_bucket = (
-            ids.groupBy("doc_bucket").count().limit(MAX_BUCKET_LIST + 1).collect()
-        )
-        if not per_bucket:
+        matched = candidate_docs(reader, ids, [facet])
+        if matched is None:
             return spark.createDataFrame([], empty)
-        # past the cap the bucket list prunes nothing and would be
-        # driver-sized (head-only queries touch ~every bucket) — scan
-        # unpruned; broadcast is gated on MATCH rows, not bucket count
-        capped = len(per_bucket) > MAX_BUCKET_LIST
-        n_match = None if capped else sum(int(r["count"]) for r in per_bucket)
-        buckets = None if capped else [int(r["doc_bucket"]) for r in per_bucket]
-        docs = reader.doc_source(buckets=buckets).select("doc_id", facet)
-        match_ids = ids.select("doc_id")
-        if n_match is not None and n_match <= BROADCAST_CANDIDATES_MAX:
-            match_ids = F.broadcast(match_ids)
         out = (
-            docs.join(match_ids, "doc_id")
-            .groupBy(F.col(facet).cast("string").alias("facet_value"))
+            matched.groupBy(F.col(facet).cast("string").alias("facet_value"))
             .agg(F.count("*").cast("bigint").alias("n_docs"))
             .orderBy(F.desc("n_docs"), F.asc_nulls_last("facet_value"))
             .limit(k)

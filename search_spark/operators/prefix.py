@@ -204,20 +204,6 @@ def expand_fuzzy_multi(
     return out
 
 
-def expand_fuzzy(
-    reader, term: str, max_dist: int = 1, max_expansions: int = MAX_FUZZY_EXPANSIONS
-) -> list[str]:
-    """Dictionary terms within Levenshtein distance ``max_dist`` of
-    ``term`` (analyzer-normalized), top ``max_expansions`` by
-    (df DESC, term ASC)."""
-    toks = tokenize(term)
-    if not toks:
-        return []
-    return expand_fuzzy_multi(reader, [toks[0]], max_dist, max_expansions).get(
-        toks[0], []
-    )
-
-
 def fuzzy_search(
     reader,
     query_text: str,
@@ -227,20 +213,11 @@ def fuzzy_search(
 ) -> DataFrame:
     """Typo-tolerant top-k BM25: each query token expands to its
     distance-``max_dist`` dictionary neighborhood (per-token cap), the
-    union scores as a disjunctive query.  (doc_id, rank, score)."""
-    spark = reader.spark
-    if k <= 0:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    per_tok = expand_fuzzy_multi(
-        reader, sorted(set(tokenize(query_text))), max_dist, max_expansions
-    )
-    expanded = sorted({t for terms in per_tok.values() for t in terms})
-    if not expanded:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    return (
-        reader.batch_search([("q", " ".join(expanded))], k)
-        .select("doc_id", "rank", "score")
-    )
+    union scores as a disjunctive query.  (doc_id, rank, score).  A batch
+    of one (:func:`fuzzy_batch`)."""
+    return fuzzy_batch(
+        reader, [("q", query_text)], max_dist, k, max_expansions
+    ).select("doc_id", "rank", "score")
 
 
 def fuzzy_batch(

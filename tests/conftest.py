@@ -41,3 +41,23 @@ def small_corpus_pd():
     from search_spark.corpus import generate_pandas
 
     return generate_pandas(200)
+
+
+@pytest.fixture
+def verify_paths(monkeypatch):
+    """Iterate the two positional-verify paths of operators/phrase.py.
+
+    ``for path in verify_paths(): ...`` runs the loop body once with
+    ``DENSE_SKIP_FRAC`` = 0.0 (every query verifies over the flat corpus
+    scan) and once with 1.01 (every query takes candidates from the index
+    first).  The fixture corpora's terms all have df above the default
+    0.5, so without this only the flat path is ever reached."""
+    import search_spark.operators.phrase as ph
+
+    def paths():
+        for path, frac in (("flat", 0.0), ("candidate", 1.01)):
+            with monkeypatch.context() as m:
+                m.setattr(ph, "DENSE_SKIP_FRAC", frac)
+                yield path
+
+    return paths

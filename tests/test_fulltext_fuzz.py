@@ -4,7 +4,9 @@ One deterministic adversarial corpus (seed 7): tiny vocab with heavy
 repetition (phrase/overlap stress), empty and single-token docs,
 punctuation/numerics, a doc of one repeated word.  Engine and DuckDB
 oracle must agree on every random phrase / proximity / boolean query —
-the same twin-testing doctrine as the core scorer's property fuzz."""
+the same twin-testing doctrine as the core scorer's property fuzz.
+Phrase and proximity queries run on both verify paths (flat corpus scan
+and index candidates)."""
 
 from __future__ import annotations
 
@@ -77,37 +79,47 @@ def rig(spark, tmp_path_factory):
     return IndexReader(spark, store), con
 
 
-def test_random_phrases_match_oracle(rig):
+def test_random_phrases_match_oracle(rig, verify_paths):
     reader, con = rig
     rng = random.Random(11)
-    for _ in range(10):
-        phrase = " ".join(rng.choice(VOCAB) for _ in range(rng.randint(1, 3)))
-        got = [
-            (r["doc_id"], round(r["score"] * 1e6), r["ptf"])
-            for r in phrase_search(reader, phrase, 10).collect()
-        ]
-        want = [
-            (r[0], r[2], r[3])
-            for r in con.execute(phrase_topk_sql(phrase, 10)).fetchall()
-        ]
-        assert got == want, phrase
+    phrases = [
+        " ".join(rng.choice(VOCAB) for _ in range(rng.randint(1, 3)))
+        for _ in range(10)
+    ]
+    for path in verify_paths():
+        for phrase in phrases:
+            got = [
+                (r["doc_id"], round(r["score"] * 1e6), r["ptf"])
+                for r in phrase_search(reader, phrase, 10).collect()
+            ]
+            want = [
+                (r[0], r[2], r[3])
+                for r in con.execute(phrase_topk_sql(phrase, 10)).fetchall()
+            ]
+            assert got == want, (path, phrase)
 
 
-def test_random_proximity_matches_oracle(rig):
+def test_random_proximity_matches_oracle(rig, verify_paths):
     reader, con = rig
     rng = random.Random(13)
-    for _ in range(10):
-        q = " ".join(rng.choice(VOCAB) for _ in range(rng.randint(1, 3)))
-        slop = rng.randint(0, 4)
-        got = [
-            (r["doc_id"], round(r["score"] * 1e6), r["ptf"])
-            for r in near_search(reader, q, slop, 10).collect()
-        ]
-        want = [
-            (r[0], r[2], r[3])
-            for r in con.execute(near_topk_sql(q, slop, 10)).fetchall()
-        ]
-        assert got == want, (q, slop)
+    queries = [
+        (
+            " ".join(rng.choice(VOCAB) for _ in range(rng.randint(1, 3))),
+            rng.randint(0, 4),
+        )
+        for _ in range(10)
+    ]
+    for path in verify_paths():
+        for q, slop in queries:
+            got = [
+                (r["doc_id"], round(r["score"] * 1e6), r["ptf"])
+                for r in near_search(reader, q, slop, 10).collect()
+            ]
+            want = [
+                (r[0], r[2], r[3])
+                for r in con.execute(near_topk_sql(q, slop, 10)).fetchall()
+            ]
+            assert got == want, (path, q, slop)
 
 
 def test_random_boolean_matches_oracle(rig):

@@ -164,6 +164,30 @@ def test_lsh_budgeted_all_probes_empty_returns_empty(spark, tmp_path):
     assert idx.topk([(99, (-v).tolist())], k=5, radius=1).count() == 0
 
 
+def test_lsh_index_leaves_caller_conf(spark, tmp_path):
+    """Opening an LshIndex widens the parquet In-filter pushdown threshold
+    in the index's own session only; the caller's session keeps its value
+    and the index still answers."""
+    import numpy as np
+    import pandas as pd
+
+    from search_spark.operators.ann_index import LshIndex, build_lsh_index
+
+    key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    before = spark.conf.get(key)
+    v = np.ones(16, dtype=np.float32)
+    emb = spark.createDataFrame(
+        pd.DataFrame(
+            {"vec_id": np.arange(5, dtype=np.int64), "embedding": [v.tolist()] * 5}
+        )
+    )
+    build_lsh_index(spark, emb, str(tmp_path / "lsh"), tables=2, planes=4)
+    idx = LshIndex(spark, str(tmp_path / "lsh"))
+    assert spark.conf.get(key) == before
+    assert idx.spark.conf.get(key) == "4096"
+    assert idx.topk([(0, v.tolist())], k=3).count() == 3
+
+
 def test_persisted_ivf_index_recall_and_pruning(spark, tmp_path):
     """IVF ANN (coarse-quantizer alternative to sign-LSH): deterministic
     sample-fit k-means cells, partition-pruned nprobe scan, exact rerank.

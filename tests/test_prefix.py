@@ -13,7 +13,7 @@ sys.path.insert(0, "/root/repo")
 from search_spark.corpus import transcripts_from_documents
 from search_spark.operators.indexer import build_index
 from search_spark.operators.prefix import (
-    expand_fuzzy,
+    expand_fuzzy_multi,
     expand_prefix,
     fuzzy_search,
     prefix_search,
@@ -97,8 +97,8 @@ def test_fuzzy_matches_oracle(reader, ddb, q, dist):
 
 
 def test_fuzzy_expansion_and_guards(reader):
-    assert expand_fuzzy(reader, "ordr") == ["order"]
-    assert expand_fuzzy(reader, "") == []
+    assert expand_fuzzy_multi(reader, ["ordr"]) == {"ordr": ["order"]}
+    assert expand_fuzzy_multi(reader, [""]) == {}
     assert fuzzy_search(reader, "zzzzzz", 1, 10).count() == 0
     assert fuzzy_search(reader, "ordr", 1, 0).count() == 0
     # exact terms are within distance 0 of themselves
